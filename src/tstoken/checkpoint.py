@@ -1,16 +1,19 @@
-"""Per-partition checkpoint ledger: lineage + throughput metrics + resume.
+"""Per-unit checkpoint ledger: lineage + throughput metrics + resume.
 
-North rule: "resumable from per-partition checkpoints carrying lineage +
-throughput metrics". The ledger is itself a table (FIXTURES.md A2):
+A work unit is (tier, source, chunk), chunk being the UTC day of the
+bucket. Every 1h/1d bucket nests in one day and the measures are
+associative, so a unit is computed from its own rows alone; the tier
+tables are partitioned by ("chunk", "source"), one unit per partition.
+The ledger is a table too (FIXTURES.md A2), one LEDGER_SCHEMA row per
+finished unit.
 
-    ledger(tier, source, chunk, input_snapshot, rows_in, rows_out,
-           wall_ms, points_per_sec, finished_at)
-
-A work unit is (tier, source, chunk) where chunk is a day index of the
-bucket. `pending_units` anti-joins the candidate units against the
-ledger (SURVEY.md J3), so a re-run after a crash processes only the
-missing units; tier writes go through overwrite_partitions, so
-replaying a unit is idempotent (byte-identical tiers).
+A run reads the ledger once and skips the units it holds (SURVEY.md J3):
+1m candidates come from the raw input, a cascade's from the finer
+tier's partitions, read pruned to the pending units. Each tier
+partition-overwrites only its pending units, and the ledger rows of all
+tiers are appended in one write at the end of the run. A crash before
+that append replays the run's units: idempotent, since a partition
+overwrite replaces the unit (byte-identical tiers).
 """
 
 from __future__ import annotations
@@ -18,29 +21,27 @@ from __future__ import annotations
 import time
 from datetime import datetime, timezone
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (IntegerType, LongType, DoubleType, StringType,
-                               StructField, StructType, TimestampType)
 
 from .tableio import TableIO
 
 LEDGER_TABLE = "ledger"
-LEDGER_SCHEMA = StructType([
-    StructField("tier", StringType()),
-    StructField("source", StringType()),
-    StructField("chunk", IntegerType()),      # day index since epoch
-    StructField("input_snapshot", StringType()),
-    StructField("rows_in", LongType()),
-    StructField("rows_out", LongType()),
-    StructField("wall_ms", LongType()),
-    StructField("points_per_sec", DoubleType()),
-    StructField("finished_at", TimestampType()),
-])
+LEDGER_SCHEMA = ("tier string, source string, chunk int, "  # chunk: day index
+                 "input_snapshot string, rows_in long, rows_out long, "
+                 "wall_ms long, points_per_sec double, finished_at timestamp")
+LEDGER_COLUMNS = [c.split()[0] for c in LEDGER_SCHEMA.split(", ")]
+TIER_PARTITIONS = ("chunk", "source")
 
 
 def chunk_col() -> F.Column:
     return F.floor(F.col("bucket_ts").cast("long") / F.lit(86400)).cast("int")
+
+
+def unit_key() -> F.Column:
+    """Unit key `<chunk>/<source>`; a filter on it prunes partitions."""
+    return F.concat_ws("/", F.col("chunk").cast("string"), "source")
 
 
 def read_ledger(io: TableIO) -> DataFrame:
@@ -49,29 +50,25 @@ def read_ledger(io: TableIO) -> DataFrame:
     return io.spark.createDataFrame([], LEDGER_SCHEMA)
 
 
-def pending_units(candidates: DataFrame, ledger: DataFrame,
-                  tier: str) -> DataFrame:
-    """(source, chunk) units not yet in the ledger for this tier."""
-    done = ledger.filter(F.col("tier") == tier).select("source", "chunk")
-    return candidates.select("source", "chunk").distinct() \
-        .join(done, ["source", "chunk"], "left_anti")
-
-
-def record_units(io: TableIO, tier: str, units_with_counts: DataFrame,
-                 input_snapshot: str, wall_ms: int) -> None:
-    """Append finished units. units_with_counts: (source, chunk,
-    rows_in, rows_out). Throughput is attributed evenly by rows."""
-    total = units_with_counts.agg(F.sum("rows_out")).collect()[0][0] or 0
-    pps = (total / (wall_ms / 1000.0)) if wall_ms > 0 else 0.0
+def _write_units(io: TableIO, tier: str, work: DataFrame,
+                 input_snapshot: str, t0: float) -> list[tuple]:
+    """Partition-overwrite the units of `work` (tier rows with a chunk
+    column) into rollup_<tier>; returns their ledger rows. One collect
+    on the cached rows yields both the units and their counts."""
+    work = work.cache()
+    units = work.groupBy("source", "chunk").agg(
+        F.sum("n_docs").alias("rows_in"),
+        F.count(F.lit(1)).alias("rows_out")).collect()
+    if units:
+        io.overwrite_partitions(f"rollup_{tier}",
+                                work.repartition(*TIER_PARTITIONS),
+                                partition_by=TIER_PARTITIONS)
+    work.unpersist()
+    wall_ms = int((time.time() - t0) * 1000)
+    pps = 1000.0 * sum(u.rows_out for u in units) / max(wall_ms, 1)
     now = datetime.now(timezone.utc)
-    rows = (units_with_counts
-            .withColumn("tier", F.lit(tier))
-            .withColumn("input_snapshot", F.lit(input_snapshot))
-            .withColumn("wall_ms", F.lit(wall_ms).cast("long"))
-            .withColumn("points_per_sec", F.lit(float(pps)))
-            .withColumn("finished_at", F.lit(now))
-            .select([f.name for f in LEDGER_SCHEMA.fields]))
-    io.append(LEDGER_TABLE, rows, partition_by=("tier",))
+    return [(tier, u.source, u.chunk, input_snapshot, u.rows_in,
+             u.rows_out, wall_ms, pps, now) for u in units]
 
 
 def run_incremental_rollup(spark: SparkSession, io: TableIO, raw: DataFrame,
@@ -83,57 +80,32 @@ def run_incremental_rollup(spark: SparkSession, io: TableIO, raw: DataFrame,
     """
     from .rollup import rollup_1m, rollup_cascade
 
-    ledger = read_ledger(io)
-    processed: dict[str, int] = {}
+    done = {"1m": set(), "1h": set(), "1d": set()}
+    for r in read_ledger(io).select("tier", "source", "chunk").collect():
+        done[r.tier].add(f"{r.chunk}/{r.source}")
 
     # ---- 1m from raw
     t0 = time.time()
-    full_1m = rollup_1m(raw, n_salts=n_salts).withColumn("chunk", chunk_col())
-    pend = pending_units(full_1m, ledger, "1m")
-    n_pend = pend.count()
-    processed["1m"] = n_pend
-    if n_pend > 0:
-        work = full_1m.join(F.broadcast(pend), ["source", "chunk"], "left_semi")
-        work = work.cache()
-        io_snapshot = "raw"
-        if io.exists("rollup_1m"):
-            merged = io.read("rollup_1m").join(
-                pend, ["source", "chunk"], "left_anti").unionByName(work)
-            io.overwrite_safe("rollup_1m", merged, partition_by=("source",))
-        else:
-            io.overwrite("rollup_1m", work, partition_by=("source",))
-        counts = work.groupBy("source", "chunk").agg(
-            F.sum("n_docs").alias("rows_in"),
-            F.count(F.lit(1)).alias("rows_out"))
-        record_units(io, "1m", counts, io_snapshot,
-                     int((time.time() - t0) * 1000))
-        work.unpersist()
+    work = rollup_1m(raw, n_salts=n_salts).withColumn("chunk", chunk_col()) \
+        .where(~unit_key().isin(sorted(done["1m"])))
+    rows = _write_units(io, "1m", work, "raw", t0)
 
-    # ---- cascades
+    # ---- cascades: candidates are the finer tier's partitions
     for src_tier, dst_tier in (("1m", "1h"), ("1h", "1d")):
         t0 = time.time()
-        ledger = read_ledger(io)
-        src_df = io.read(f"rollup_{src_tier}")
-        full = rollup_cascade(src_df.drop("chunk"), dst_tier) \
+        src = f"rollup_{src_tier}"
+        pend = {f"{p['chunk']}/{p['source']}" for p in io.partitions(src)}
+        pend = sorted(pend - done[dst_tier])
+        if not pend:
+            continue
+        finer = io.read(src).where(unit_key().isin(pend))  # partition pruning
+        work = rollup_cascade(finer.drop("chunk"), dst_tier) \
             .withColumn("chunk", chunk_col())
-        pend = pending_units(full, ledger, dst_tier)
-        n_pend = pend.count()
-        processed[dst_tier] = n_pend
-        if n_pend > 0:
-            work = full.join(F.broadcast(pend), ["source", "chunk"], "left_semi")
-            work = work.cache()
-            if io.exists(f"rollup_{dst_tier}"):
-                merged = io.read(f"rollup_{dst_tier}").join(
-                    pend, ["source", "chunk"], "left_anti").unionByName(work)
-                io.overwrite_safe(f"rollup_{dst_tier}", merged,
-                                  partition_by=("source",))
-            else:
-                io.overwrite(f"rollup_{dst_tier}", work, partition_by=("source",))
-            counts = work.groupBy("source", "chunk").agg(
-                F.sum("n_docs").alias("rows_in"),
-                F.count(F.lit(1)).alias("rows_out"))
-            record_units(io, dst_tier, counts,
-                         f"rollup_{src_tier}@{io.snapshot_id(f'rollup_{src_tier}')}",
-                         int((time.time() - t0) * 1000))
-            work.unpersist()
-    return processed
+        rows += _write_units(io, dst_tier, work,
+                             f"{src}@{io.snapshot_id(src)}", t0)
+
+    if rows:  # local rows via pandas; one task, one ledger file per tier
+        ledger = spark.createDataFrame(
+            pd.DataFrame(rows, columns=LEDGER_COLUMNS), LEDGER_SCHEMA)
+        io.append(LEDGER_TABLE, ledger.coalesce(1), partition_by=("tier",))
+    return {t: sum(r[0] == t for r in rows) for t in done}

@@ -327,10 +327,13 @@ class _BitReader:
             self.bits <<= 8            # zero-pad past EOI (spec allows)
             self.nbits += 8
             return
-        b = self.data[self.pos]
-        self.pos += 1
+        try:
+            b = self.data[self.pos]
+            self.pos += 1
+            nxt = self.data[self.pos] if b == 0xFF else None
+        except IndexError:
+            raise ValueError("JPEG entropy data truncated") from None
         if b == 0xFF:
-            nxt = self.data[self.pos]
             if nxt == 0x00:
                 self.pos += 1          # stuffed byte
             elif 0xD0 <= nxt <= 0xD7:  # RST inside fill: caller's job
@@ -375,6 +378,12 @@ class _RestartMarker(Exception):
 def _extend(v: int, t: int) -> int:
     """T.81 EXTEND: map t-bit magnitude v to signed coefficient."""
     return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
+
+
+def _rst_at(payload: bytes, p: int) -> bool:
+    """An RSTn marker starts at `p`; a truncated lone 0xFF is none."""
+    m = payload[p:p + 2]
+    return len(m) == 2 and m[0] == 0xFF and 0xD0 <= m[1] <= 0xD7
 
 
 def jpeg_decode(payload: bytes) -> np.ndarray:
@@ -505,8 +514,7 @@ def _jpeg_scan(payload: bytes, pos: int, frame: dict, scan: list,
                 # byte-align, expect RSTn
                 reader.align()
                 p = reader.pos
-                if payload[p:p + 1] == b"\xff" and \
-                        0xD0 <= payload[p + 1] <= 0xD7:
+                if _rst_at(payload, p):
                     reader.pos = p + 2
                 pred = {c["id"]: 0 for c in comps}
             try:
@@ -729,7 +737,7 @@ def _prog_scan(payload: bytes, pos: int, frame: dict, scan: list,
     def do_restart():
         reader.align()
         p = reader.pos
-        if payload[p:p + 1] == b"\xff" and 0xD0 <= payload[p + 1] <= 0xD7:
+        if _rst_at(payload, p):
             reader.pos = p + 2
         else:
             raise ValueError("JPEG restart marker missing in scan")

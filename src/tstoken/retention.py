@@ -1,14 +1,14 @@
 """Retention policies per tier (north rule: "retention policies").
 
-Each tier keeps a sliding horizon of buckets; expired buckets are
-dropped with a partition/metadata-friendly predicate on bucket_ts
-(Iceberg: metadata delete; parquet fallback: filtered rewrite —
-see tableio.delete_where). Horizons follow the usual telemetry shape:
-fine tiers are short-lived, coarse tiers long-lived.
+Each tier keeps a sliding horizon of buckets. Expiry drops the whole
+day `chunk` partitions below the cutoff without reading data; a cutoff
+inside a day rewrites only the chunk it cuts (tableio.delete_where).
+Fine tiers are short-lived, coarse tiers long-lived.
 """
 
 from __future__ import annotations
 
+import calendar
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
@@ -32,16 +32,20 @@ def retention_horizon(tier: str, now: datetime,
 
 def apply_retention(io: TableIO, tier: str, now: datetime | None = None,
                     horizons: dict | None = None) -> int | None:
-    """Delete expired buckets from rollup_<tier>; returns new snapshot id."""
+    """Delete expired buckets from rollup_<tier>; returns its snapshot
+    id. A naive `now` is taken as UTC."""
     now = now or datetime.now(timezone.utc)
     cutoff = retention_horizon(tier, now, horizons)
-    if cutoff is None:
-        return None
     table = f"rollup_{tier}"
-    if not io.exists(table):
+    if cutoff is None or not io.exists(table):
         return None
-    pred = f"bucket_ts < TIMESTAMP '{cutoff.strftime('%Y-%m-%d %H:%M:%S')}'"
-    return io.delete_where(table, pred)
+    cut = calendar.timegm(cutoff.utctimetuple())
+    day, rest = divmod(cut, 86400)
+    io.drop_partitions(table, "chunk", below=day)
+    if rest:
+        io.delete_where(table, f"bucket_ts < timestamp_seconds({cut})",
+                        "chunk", day)
+    return io.snapshot_id(table)
 
 
 def filter_retained(df: DataFrame, tier: str, now: datetime,

@@ -1,28 +1,27 @@
-"""Table IO seam: Iceberg when available, partitioned Parquet fallback.
+"""Table IO seam: Iceberg when its runtime is on the classpath,
+partitioned Parquet otherwise; one API over both backends.
 
-The production spec (BASELINE.json north_rule) targets Iceberg tables;
-this sandbox has no iceberg-spark-runtime jar (verified in SURVEY.md
-§7.0), so TableIO exposes one API with two backends:
-
-  - `iceberg`: spark.catalog tables, MERGE INTO upserts, snapshot ids
-    from the snapshots metadata table (used when the configured catalog
-    exists on the classpath);
-  - `parquet`: directory-per-table layout partitioned by `source`,
-    dynamic partition-overwrite emulating MERGE-by-partition, and a
-    manifest JSON carrying a monotonically increasing snapshot id +
-    row counts (the lineage anchor for checkpoint.py).
-
-Writes are idempotent at partition granularity: re-writing a partition
-replaces it (INSERT OVERWRITE semantics), which is what makes the
-checkpoint/resume path safe to re-run.
+Tier tables are partitioned by ("chunk", "source"), one checkpoint unit
+(a source's buckets of one UTC day) per partition and file.
+`overwrite_partitions` replaces only the partitions the DataFrame holds
+(Iceberg `overwritePartitions` on a table created with that
+partitioning, parquet dynamic overwrite set per writer, never on the
+session), so re-writing a unit is idempotent. `drop_partitions` deletes
+whole top-level partitions without reading a data file; `delete_where`
+rewrites the survivors of one top-level partition in the table's own
+layout. Parquet tables carry a manifest JSON whose monotonically
+increasing snapshot id is the lineage anchor checkpoint.py records.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import time
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -73,6 +72,13 @@ class TableIO:
             json.dump(m, f)
         return m["snapshot_id"]
 
+    def _create(self, table: str, df: DataFrame,
+                partition_by: tuple[str, ...]):
+        """Iceberg writer partitioned like the parquet layout."""
+        w = df.writeTo(f"{self.catalog}.{table}")
+        return w.partitionedBy(*map(F.col, partition_by)) if partition_by \
+            else w
+
     # -------------------------------------------------------------- API
 
     def exists(self, table: str) -> bool:
@@ -80,12 +86,29 @@ class TableIO:
             return self.spark.catalog.tableExists(f"{self.catalog}.{table}")
         p = self._path(table)
         return os.path.exists(p) and any(
-            not e.startswith("_") for e in os.listdir(p))
+            not e.startswith(("_", ".")) for e in os.listdir(p))
 
     def read(self, table: str) -> DataFrame:
         if self.backend == "iceberg":
             return self.spark.read.table(f"{self.catalog}.{table}")
         return self.spark.read.parquet(self._path(table))
+
+    def partitions(self, table: str) -> list[dict[str, str]]:
+        """One {column: value} per partition, values as strings; parquet
+        lists the directory tree and reads no data file."""
+        if not self.exists(table):
+            return []
+        if self.backend == "iceberg":
+            rows = self.spark.sql(
+                f"SELECT partition FROM {self.catalog}.{table}.partitions"
+            ).collect()
+            return [{k: str(v) for k, v in r[0].asDict().items()}
+                    for r in rows]
+        dirs = {os.path.dirname(f) for f in glob.glob(
+            "**/*.parquet", root_dir=self._path(table), recursive=True)}
+        return [dict(map(unquote, p.split("=", 1)) for p in d.split(os.sep))
+                for d in sorted(dirs)
+                if all("=" in p for p in d.split(os.sep))]
 
     def append(self, table: str, df: DataFrame,
                partition_by: tuple[str, ...] = ("source",)) -> int:
@@ -98,63 +121,62 @@ class TableIO:
 
     def overwrite_partitions(self, table: str, df: DataFrame,
                              partition_by: tuple[str, ...] = ("source",)) -> int:
-        """INSERT OVERWRITE matching partitions (dynamic) — the
-        parquet emulation of Iceberg MERGE-by-partition."""
+        """INSERT OVERWRITE of the partitions `df` holds; every other
+        partition stays (parquet's Iceberg MERGE-by-partition)."""
         if self.backend == "iceberg":
-            df.writeTo(f"{self.catalog}.{table}").overwritePartitions()
+            if self.exists(table):
+                df.writeTo(f"{self.catalog}.{table}").overwritePartitions()
+            else:
+                self._create(table, df, partition_by).create()
             return self.snapshot_id(table)
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (df.write.mode("overwrite").partitionBy(*partition_by)
-           .parquet(self._path(table)))
+        (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+           .partitionBy(*partition_by).parquet(self._path(table)))
         return self._bump_manifest(table, "overwrite_partitions", -1)
 
     def overwrite(self, table: str, df: DataFrame,
                   partition_by: tuple[str, ...] = ("source",)) -> int:
         if self.backend == "iceberg":
-            df.writeTo(f"{self.catalog}.{table}").createOrReplace()
+            self._create(table, df, partition_by).createOrReplace()
             return self.snapshot_id(table)
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-        (df.write.mode("overwrite").partitionBy(*partition_by)
-           .parquet(self._path(table)))
+        (df.write.mode("overwrite").option("partitionOverwriteMode", "static")
+           .partitionBy(*partition_by).parquet(self._path(table)))
         return self._bump_manifest(table, "overwrite", -1)
 
-    def overwrite_safe(self, table: str, df: DataFrame,
-                       partition_by: tuple[str, ...] = ("source",)) -> int:
-        """Overwrite a table with a DataFrame that may READ from the same
-        table (merge-back). Iceberg snapshots make this safe natively;
-        the parquet fallback stages to a sibling dir and swaps."""
-        if self.backend == "iceberg" or not self.exists(table):
-            return self.overwrite(table, df, partition_by)
-        import shutil
-        final = self._path(table)
-        tmp = final + "__staging"
-        (df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp))
-        manifest = self._read_manifest(table)
-        shutil.rmtree(final)
-        os.rename(tmp, final)
-        with open(self._manifest_path(table), "w") as f:
-            json.dump(manifest, f)
-        return self._bump_manifest(table, "overwrite_safe", -1)
-
-    def delete_where(self, table: str, predicate: str) -> int:
-        """Retention delete. Iceberg: metadata-only DELETE FROM;
-        parquet fallback: rewrite the surviving rows."""
+    def drop_partitions(self, table: str, column: str, below: int) -> int:
+        """Delete every top-level partition whose integer `column` value
+        is below `below`, without reading a data file."""
         if self.backend == "iceberg":
-            self.spark.sql(
-                f"DELETE FROM {self.catalog}.{table} WHERE {predicate}")
+            self.spark.sql(f"DELETE FROM {self.catalog}.{table} "
+                           f"WHERE {column} < {int(below)}")
             return self.snapshot_id(table)
-        df = self.read(table).filter(f"NOT ({predicate})")
-        pdf_cols = df.columns
+        root = self._path(table)
+        for e in os.listdir(root):
+            if e.startswith(f"{column}=") and int(e.split("=", 1)[1]) < below:
+                shutil.rmtree(os.path.join(root, e))
+        return self._bump_manifest(table, f"drop:{column}<{below}", -1)
+
+    def delete_where(self, table: str, predicate: str, column: str,
+                     value: int) -> int:
+        """Delete the rows matching `predicate` from the top-level
+        partition `column = value`; parquet rewrites that partition's
+        survivors in the table's own layout, one file per partition."""
+        if self.backend == "iceberg":
+            self.spark.sql(f"DELETE FROM {self.catalog}.{table} WHERE "
+                           f"{column} = {int(value)} AND ({predicate})")
+            return self.snapshot_id(table)
+        part = f"{column}={int(value)}"
+        final = os.path.join(self._path(table), part)
+        if not os.path.isdir(final):
+            return self.snapshot_id(table)
+        layout = list(self.partitions(table)[0])
         tmp = self._path(table) + "__tmp"
-        df.write.mode("overwrite").partitionBy("source").parquet(tmp)
-        final = self._path(table)
-        import shutil
-        manifest = self._read_manifest(table)
+        (self.read(table).where(F.col(column) == value)
+         .filter(f"NOT ({predicate})").repartition(*layout)
+         .write.mode("overwrite").partitionBy(*layout).parquet(tmp))
         shutil.rmtree(final)
-        os.rename(tmp, final)
-        with open(self._manifest_path(table), "w") as f:
-            json.dump(manifest, f)
-        del pdf_cols
+        if os.path.isdir(os.path.join(tmp, part)):
+            os.rename(os.path.join(tmp, part), final)
+        shutil.rmtree(tmp)
         return self._bump_manifest(table, f"delete_where:{predicate}", -1)
 
     def snapshot_id(self, table: str) -> int:

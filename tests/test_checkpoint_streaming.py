@@ -89,6 +89,135 @@ class TestRetentionDelete:
         assert (hi - lo).total_seconds() <= 3600
 
 
+class TestTableIO:
+    def test_writes_leave_session_overwrite_mode(self, spark, tmp_path):
+        """The overwrite mode is a per-writer option: a TableIO write must
+        not change how the caller's own overwrite writes behave."""
+        key = "spark.sql.sources.partitionOverwriteMode"
+        before = spark.conf.get(key)
+        io = TableIO(spark, str(tmp_path / "tiers"))
+        df = spark.createDataFrame([(1, "a"), (2, "b")], "v int, p string")
+        io.overwrite("t", df, partition_by=("p",))
+        io.overwrite_partitions("t", df.where("p = 'a'")
+                                .withColumn("v", F.lit(9)),
+                                partition_by=("p",))
+        assert spark.conf.get(key) == before
+        # dynamic: only partition p=a was replaced
+        assert sorted(map(tuple, io.read("t").select("p", "v").collect())) \
+            == [("a", 9), ("b", 2)]
+        assert io.partitions("t") == [{"p": "a"}, {"p": "b"}]
+
+
+class TestIncrementalDays:
+    """Raw lands one UTC day at a time, as an incremental pipeline sees
+    it: every tier must equal the batch build over the whole table."""
+
+    SOURCES = 2
+    THIN = 128           # keep every 128th document of each source
+
+    @pytest.fixture(scope="class")
+    def days(self, spark):
+        from tstoken.rollup import seq_col, with_event_time
+        # ~124k generated docs: both sources span 3+ event days
+        raw = synth.generate_tokens_raw(spark, 124_000,
+                                        n_sources=self.SOURCES)
+        raw = raw.where(seq_col() % self.THIN == 0)
+        timed = with_event_time(raw)
+        day = F.floor((F.col("event_ts").cast("long") - synth.T0_EPOCH)
+                      / 86400)
+        n = int(timed.agg(F.max(day)).collect()[0][0]) + 1
+        assert n >= 4
+        return raw, [timed.where(day == d).drop("event_ts")
+                     for d in range(n)]
+
+    @staticmethod
+    def _tier(df):
+        return df.drop("chunk").toPandas() \
+            .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
+
+    def test_day_by_day_equals_batch(self, spark, tmp_path, days):
+        from tstoken.rollup import build_all_tiers
+        raw, landed = days
+        io = TableIO(spark, str(tmp_path / "tiers"))
+        for d in landed:
+            p = run_incremental_rollup(spark, io, d)
+            assert p["1m"] == p["1h"] == p["1d"] > 0
+        want = build_all_tiers(raw)
+        for t in ("1m", "1h", "1d"):
+            pd.testing.assert_frame_equal(
+                self._tier(io.read(f"rollup_{t}")), self._tier(want[t]),
+                check_like=True)
+        # one partition, one file and one ledger row per unit
+        units = {(p["chunk"], p["source"])
+                 for p in io.partitions("rollup_1m")}
+        files = list((tmp_path / "tiers" / "rollup_1m")
+                     .glob("chunk=*/source=*/*.parquet"))
+        assert len(files) == len(units)
+        led = read_ledger(io).toPandas()
+        assert not led[["tier", "source", "chunk"]].duplicated().any()
+        assert len(led) == 3 * len(units)
+
+    def test_crash_between_tiers_rebuilds_1h_only(self, spark, tmp_path,
+                                                  days):
+        """Erase one source's 1h ledger rows (a crash after the 1m write):
+        the re-run rebuilds those 1h units from rollup_1m, byte-identical,
+        and recomputes no 1m unit."""
+        raw, landed = days
+        io = TableIO(spark, str(tmp_path / "tiers"))
+        run_incremental_rollup(spark, io, raw)
+        before = {t: self._tier(io.read(f"rollup_{t}"))
+                  for t in ("1m", "1h", "1d")}
+        ledger = read_ledger(io).toPandas()
+        erase = (ledger["tier"] == "1h") & (ledger["source"] == "src-001")
+        assert erase.sum() >= 4
+        io.overwrite("ledger", spark.createDataFrame(
+            ledger[~erase], schema=read_ledger(io).schema),
+            partition_by=("tier",))
+
+        p = run_incremental_rollup(spark, io, raw)
+        assert p == {"1m": 0, "1h": int(erase.sum()), "1d": 0}
+        for t in ("1m", "1h", "1d"):
+            pd.testing.assert_frame_equal(
+                before[t], self._tier(io.read(f"rollup_{t}")))
+        assert len(read_ledger(io).toPandas()) == len(ledger)
+
+    def test_retention_keeps_layout(self, spark, tmp_path, days):
+        """A non-day-aligned cutoff rewrites its boundary chunk in the
+        (chunk, source) layout, and later days still land."""
+        from datetime import timedelta
+        from tstoken.retention import apply_retention
+        _, landed = days
+        io = TableIO(spark, str(tmp_path / "tiers"))
+        for d in landed[:3]:
+            run_incremental_rollup(spark, io, d)
+        hi = io.read("rollup_1m").agg(F.max("bucket_ts")).collect()[0][0]
+        apply_retention(io, "1m", now=hi,
+                        horizons={"1m": timedelta(hours=1)})
+        kept = io.read("rollup_1m")
+        lo = kept.agg(F.min("bucket_ts")).collect()[0][0]
+        assert 0 < (hi - lo).total_seconds() <= 3600
+
+        p = run_incremental_rollup(spark, io, landed[3])
+        assert p["1m"] > 0
+        root = tmp_path / "tiers" / "rollup_1m"
+        leaves = {f.parent.relative_to(root)
+                  for f in root.rglob("*.parquet")}
+        assert leaves and all(
+            len(x.parts) == 2 and x.parts[0].startswith("chunk=")
+            and x.parts[1].startswith("source=") for x in leaves)
+        day3 = str(synth.T0_EPOCH // 86400 + 3)
+        sources = {r.source for r in
+                   landed[3].select("source").distinct().collect()}
+        assert {p["source"] for p in io.partitions("rollup_1m")
+                if p["chunk"] == day3} == sources
+        # a cutoff past every bucket expires the whole tier; again: no-op
+        late = hi + timedelta(days=30, minutes=30)
+        for _ in range(2):
+            apply_retention(io, "1h", now=late,
+                            horizons={"1h": timedelta(days=1)})
+        assert not io.exists("rollup_1h") and io.partitions("rollup_1h") == []
+
+
 class TestStreaming:
     def test_stream_matches_batch(self, spark, tmp_path):
         from tstoken.rollup import rollup_1m

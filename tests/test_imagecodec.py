@@ -404,6 +404,32 @@ class TestJpegDecodeSpecFixture:
         with pytest.raises(ValueError):
             jpeg_decode(bytes(payload))
 
+    def test_truncated_restart_marker_raises_valueerror(self):
+        """A stream cut right after the 0xFF of an RSTn marker, in both
+        the progressive and the baseline scan loops, is malformed data
+        (ValueError), not an IndexError past the end of the payload."""
+        from tstoken.imagecodec import _FLAT_HUFF
+        counts, syms = _FLAT_HUFF
+        dc0 = _Bits()                  # DC first scan: category 0 = 0x00
+        dc0.put(*_flat_code(0x00))     # one whole byte, then RST0
+        prog = b"".join([
+            b"\xff\xd8",
+            _seg(0xDB, bytes([0]) + bytes([1] * 64)),
+            _seg(0xC2, struct.pack(">BHHB", 8, 8, 16, 1)
+                 + bytes([1, 0x11, 0])),
+            _seg(0xC4, bytes([0x00]) + bytes(counts) + bytes(syms)),
+            _seg(0xDD, struct.pack(">H", 1)),
+            _seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x01])),
+            dc0.bytes() + b"\xff\xd0" + dc0.bytes()])
+        assert len(jpeg_decode(prog + b"\xff\xd9")) == 8  # intact: decodes
+        cut = prog.rindex(b"\xff\xd0") + 1
+        with pytest.raises(ValueError):
+            jpeg_decode(prog[:cut])
+        mcu = bytes([0b10010010, 0b10111111])
+        base = _minimal_gray_jpeg(mcu + b"\xff\xd0" + mcu, w=16, dri=1)
+        with pytest.raises(ValueError):
+            jpeg_decode(base[:base.rindex(b"\xff\xd0") + 1])
+
     def test_truncated_raises(self):
         payload = jpeg_encode(np.zeros((16, 16), np.uint8))
         with pytest.raises((ValueError, IndexError)):

@@ -44,6 +44,36 @@ class TestOracleCompare:
         assert compare(a, b) is None
 
 
+class TestOracleResume:
+    PRIOR = {"sf_dir": "/data/sf0.01", "commit": "a" * 40,
+             "queries": {"q_ok": {"status": "OK"},
+                         "q_rows": {"status": "rows_only"},
+                         "q_fail": {"status": "FAIL"}}}
+
+    def test_same_commit_keeps_completed_rows(self):
+        from check_oracles import resumable_rows
+        kept = resumable_rows(self.PRIOR, "/data/sf0.01", "a" * 40)
+        assert set(kept) == {"q_ok", "q_rows"}
+
+    def test_other_commit_reruns_every_query(self):
+        from check_oracles import resumable_rows
+        assert resumable_rows(self.PRIOR, "/data/sf0.01", "b" * 40) == {}
+        # a file written before the stamp existed is never reused
+        unstamped = {k: v for k, v in self.PRIOR.items() if k != "commit"}
+        assert resumable_rows(unstamped, "/data/sf0.01", "a" * 40) == {}
+        assert resumable_rows(self.PRIOR, "/data/sf0.01", None) == {}
+
+    def test_other_sf_dir_reruns_every_query(self):
+        from check_oracles import resumable_rows
+        assert resumable_rows(self.PRIOR, "/data/sf0.1", "a" * 40) == {}
+
+    def test_head_commit_is_a_sha(self):
+        from check_oracles import head_commit
+        sha = head_commit()
+        assert sha is None or (len(sha) == 40
+                               and set(sha) <= set("0123456789abcdef"))
+
+
 class TestScalingVerdicts:
     def _summary(self, walls, cals):
         return {

@@ -8,6 +8,7 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 import tempfile
 import time
@@ -89,6 +90,26 @@ def compare(a: pd.DataFrame, b: pd.DataFrame) -> str | None:
     return None
 
 
+def head_commit() -> str | None:
+    """The checkout's HEAD commit, or None outside a git work tree."""
+    try:
+        return subprocess.run(["git", "rev-parse", "HEAD"], cwd=REPO,
+                              capture_output=True, text=True,
+                              check=True).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        return None
+
+
+def resumable_rows(prior: dict, sf_dir: str, commit: str | None) -> dict:
+    """Completed rows of an earlier gate run that `--resume` may keep:
+    only when it ran on the same sf dir at the same commit."""
+    if commit is None or prior.get("commit") != commit \
+            or prior.get("sf_dir") != sf_dir:
+        return {}
+    return {k: v for k, v in prior.get("queries", {}).items()
+            if v.get("status") in ("OK", "rows_only")}
+
+
 def main():
     args = sys.argv[1:]
     json_out = None
@@ -152,6 +173,7 @@ def main():
     oracles = entrymod.oracle_sql()
     failures = []
     record: dict[str, dict] = {}
+    commit = head_commit()
     if resume and json_out and os.path.exists(json_out):
         # resume from an interrupted gate: keep completed rows, re-run
         # only what's missing or failed (incremental _flush means a
@@ -159,11 +181,8 @@ def main():
         import json as _json
 
         with open(json_out) as f:
-            prior = _json.load(f)
-        if prior.get("sf_dir") == sf_dir:
-            record = {k: v for k, v in prior.get("queries", {}).items()
-                      if v.get("status") in ("OK", "rows_only")}
-            print(f"resuming: {len(record)} completed queries kept")
+            record = resumable_rows(_json.load(f), sf_dir, commit)
+        print(f"resuming: {len(record)} completed queries kept")
 
     def _flush(partial: bool) -> None:
         # incremental checkpoint: a driver OOM/GC death mid-gate (seen
@@ -173,7 +192,8 @@ def main():
         import json as _json
 
         with open(json_out, "w") as f:
-            _json.dump({"sf_dir": sf_dir, "failures": failures,
+            _json.dump({"sf_dir": sf_dir, "commit": commit,
+                        "failures": failures,
                         "queries": record, "partial": partial},
                        f, indent=1)
 
