@@ -13,12 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rollup import ROLLUP_COLUMNS, TIER_SECONDS
+from .rollup import ROLLUP_COLUMNS, SUM_MEASURES, TIER_SECONDS
 
 
 def gap_fill(rollup: DataFrame, tier: str) -> DataFrame:
-    """Densify a tier: emitted rows have gap_filled=true, zero counts,
-    null min/max."""
+    """Densify a tier: emitted rows have gap_filled=true, zero
+    sum-merged measures, null min/max."""
     secs = TIER_SECONDS[tier]
     bounds = rollup.groupBy("source").agg(
         F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi"))
@@ -29,10 +29,8 @@ def gap_fill(rollup: DataFrame, tier: str) -> DataFrame:
                 F.col("lo").cast("long"), F.col("hi").cast("long"),
                 F.lit(secs))).alias("epoch")) \
         .select("source", F.timestamp_seconds("epoch").alias("bucket_ts"))
-    joined = spine.join(rollup, ["source", "bucket_ts"], "left")
-    return (joined
-            .withColumn("gap_filled", F.col("n_docs").isNull())
-            .withColumn("n_docs", F.coalesce("n_docs", F.lit(0)))
-            .withColumn("sum_n_tok", F.coalesce("sum_n_tok", F.lit(0)))
-            .withColumn("sum_tok_sq", F.coalesce("sum_tok_sq", F.lit(0)))
-            .select(*ROLLUP_COLUMNS))
+    joined = spine.join(rollup, ["source", "bucket_ts"], "left") \
+        .withColumn("gap_filled", F.col("n_docs").isNull())
+    for name in SUM_MEASURES:
+        joined = joined.withColumn(name, F.coalesce(name, F.lit(0)))
+    return joined.select(*ROLLUP_COLUMNS)

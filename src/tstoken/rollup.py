@@ -10,8 +10,10 @@ Spark-first design (SURVEY.md A10, §4.2):
   - 1h re-aggregates 1m, 1d re-aggregates 1h (associative sums/counts/
     min/max only — the ROLLUP-cascade equivalent; averages derive at read);
   - token-derived statistics (sum of squared token ids) are computed
-    once, at the 1m tier, with higher-order array functions — the fat
-    `tokens` array is never read again above 1m (column pruning).
+    once, at the 1m tier, over the `posexplode`d token stream — the fat
+    `tokens` array is never read again above 1m (column pruning);
+  - each measure is defined once, in MEASURES, as a (partial, merge)
+    pair shared by batch 1m, the cascades, streaming and gap-fill.
 
 All tier measures are integer (count/sum/min/max of int64) ⇒ rollups
 are exactly reproducible — the BASELINE "rolled-up points must match
@@ -35,8 +37,25 @@ TIER_PERIOD = {"1m": 60, "1h": 24, "1d": 7}
 # hourly + daily cycles, 1h daily + weekly, 1d weekly + yearly)
 TIER_MSTL_PERIODS = {"1m": (60, 1440), "1h": (24, 168), "1d": (7, 365)}
 
-ROLLUP_COLUMNS = ["source", "bucket_ts", "n_docs", "sum_n_tok",
-                  "min_n_tok", "max_n_tok", "sum_tok_sq", "gap_filled"]
+# Each measure: (name, partial aggregate over token_stream() rows, where
+# `first` marks a doc's pos-0 row, merge aggregate). F.sum skips the null
+# sentinel tokens; the coalesce covers an all-empty-docs group (sum over
+# only nulls -> null, must be 0) — per group, NOT per token, since the
+# token stream is the hot loop.
+MEASURES = (
+    ("n_docs", lambda first: F.sum(F.when(first, 1)), F.sum),
+    ("sum_n_tok",
+     lambda first: F.sum(F.when(first, F.col("n_tok").cast("long"))), F.sum),
+    ("min_n_tok", lambda first: F.min(F.when(first, F.col("n_tok"))), F.min),
+    ("max_n_tok", lambda first: F.max(F.when(first, F.col("n_tok"))), F.max),
+    ("sum_tok_sq",
+     lambda first: F.coalesce(F.sum(F.col("tok").cast("long") * F.col("tok")),
+                              F.lit(0).cast("long")), F.sum),
+)
+# measures whose merge is a sum: a bucket with no docs holds 0 for them
+SUM_MEASURES = [name for name, _, merge in MEASURES if merge is F.sum]
+ROLLUP_COLUMNS = ["source", "bucket_ts", *(name for name, _, _ in MEASURES),
+                  "gap_filled"]
 
 
 def src_idx_col(source: Column = None) -> Column:
@@ -68,11 +87,25 @@ def bucket_col(event_ts: Column, tier: str) -> Column:
     return F.timestamp_seconds((epoch - F.pmod(epoch, F.lit(secs))))
 
 
-def _sum_tok_sq() -> Column:
-    """Σ token² per row via a higher-order function — no Python (F11)."""
-    return F.aggregate(
-        "tokens", F.lit(0).cast("long"),
-        lambda acc, t: acc + t.cast("long") * t.cast("long"))
+def token_stream() -> Column:
+    """`posexplode` of `tokens` as (pos, tok). Empty or null arrays get
+    one null sentinel so every doc yields a pos-0 row: zero-token docs
+    are plausible in arbitrary tokens_raw tables and count in n_docs."""
+    toks = F.coalesce(F.col("tokens"), F.array().cast("array<int>"))
+    padded = F.when(F.size(toks) == 0,
+                    F.array(F.lit(None).cast("int"))).otherwise(toks)
+    return F.posexplode(padded).alias("pos", "tok")
+
+
+def partial_aggs() -> list[Column]:
+    """The MEASURES partials, over rows selected with token_stream()."""
+    first = F.col("pos") == 0
+    return [partial(first).alias(name) for name, partial, _ in MEASURES]
+
+
+def merge_aggs() -> list[Column]:
+    """The MEASURES merges, over rows that already hold the measures."""
+    return [merge(name).alias(name) for name, _, merge in MEASURES]
 
 
 def rollup_1m(raw: DataFrame, n_salts: int = 16) -> DataFrame:
@@ -86,46 +119,19 @@ def rollup_1m(raw: DataFrame, n_salts: int = 16) -> DataFrame:
     allocation-bound and anti-scales beyond ~8 threads in one JVM.
     Doc-level measures (count/sum/min/max of n_tok) piggyback on the
     same single scan via `pos = 0` guards, so the raw table is read
-    exactly once. Empty or null `tokens` arrays are padded with a
-    single null sentinel element before the explode so every doc still
-    contributes a pos-0 row — rollup_1m is the public ingest for
-    arbitrary tokens_raw tables, where zero-token docs are plausible
-    and must count toward n_docs (round-1 ADVICE; the synth generator's
-    `n_tok >= 1` invariant never exercises this).
+    exactly once.
 
     Phase 1 shuffles on (source, bucket_ts, salt) so a skewed source's
-    rows spread over n_salts reducers; phase 2 combines the (tiny)
+    rows spread over n_salts reducers; phase 2 merges the (tiny)
     partials. All measures are associative, so the result is exact.
     """
-    toks = F.coalesce(F.col("tokens"), F.array().cast("array<int>"))
-    padded = F.when(F.size(toks) == 0,
-                    F.array(F.lit(None).cast("int"))).otherwise(toks)
     df = with_event_time(raw)
     df = (df
           .withColumn("bucket_ts", bucket_col(F.col("event_ts"), "1m"))
           .withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)))
-          .select("source", "bucket_ts", "salt", "n_tok",
-                  F.posexplode(padded).alias("pos", "tok")))
-    first = F.col("pos") == 0
-    # F.sum skips the null sentinel tokens; coalesce covers the
-    # all-empty-docs group (sum over only-nulls -> null, must be 0).
-    # Per-group coalesce, NOT a per-token branch — the token stream is
-    # the hot loop.
-    partial = (df.groupBy("source", "bucket_ts", "salt")
-               .agg(F.sum(F.when(first, 1)).alias("n_docs"),
-                    F.sum(F.when(first, F.col("n_tok").cast("long")))
-                     .alias("sum_n_tok"),
-                    F.min(F.when(first, F.col("n_tok"))).alias("min_n_tok"),
-                    F.max(F.when(first, F.col("n_tok"))).alias("max_n_tok"),
-                    F.coalesce(
-                        F.sum(F.col("tok").cast("long") * F.col("tok")),
-                        F.lit(0).cast("long")).alias("sum_tok_sq")))
-    final = (partial.groupBy("source", "bucket_ts")
-             .agg(F.sum("n_docs").alias("n_docs"),
-                  F.sum("sum_n_tok").alias("sum_n_tok"),
-                  F.min("min_n_tok").alias("min_n_tok"),
-                  F.max("max_n_tok").alias("max_n_tok"),
-                  F.sum("sum_tok_sq").alias("sum_tok_sq"))
+          .select("source", "bucket_ts", "salt", "n_tok", token_stream()))
+    partial = df.groupBy("source", "bucket_ts", "salt").agg(*partial_aggs())
+    final = (partial.groupBy("source", "bucket_ts").agg(*merge_aggs())
              .withColumn("gap_filled", F.lit(False)))
     return final.select(*ROLLUP_COLUMNS)
 
@@ -138,11 +144,7 @@ def rollup_cascade(finer: DataFrame, tier: str) -> DataFrame:
     src = finer.filter(~F.col("gap_filled"))
     return (src
             .groupBy("source", bucket_col(F.col("bucket_ts"), tier).alias("bucket_ts"))
-            .agg(F.sum("n_docs").alias("n_docs"),
-                 F.sum("sum_n_tok").alias("sum_n_tok"),
-                 F.min("min_n_tok").alias("min_n_tok"),
-                 F.max("max_n_tok").alias("max_n_tok"),
-                 F.sum("sum_tok_sq").alias("sum_tok_sq"))
+            .agg(*merge_aggs())
             .withColumn("gap_filled", F.lit(False))
             .select(*ROLLUP_COLUMNS))
 

@@ -7,6 +7,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def half_host_mem_gb(cap_gb: int) -> int:
+    """Half the host's physical RAM in whole GiB, at least 1 and at most
+    `cap_gb` — a memory default that fits the machine it runs on."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return max(1, min(cap_gb, phys // 2**31))
+
+
 def get_spark(app_name: str = "tstoken", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
@@ -50,7 +57,8 @@ def get_spark(app_name: str = "tstoken", master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                               f"{half_host_mem_gb(48)}g"))
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -2,8 +2,10 @@
 
 The reference is pure batch (SURVEY.md §2.10); the north rule's
 "continuous aggregates" get a streaming variant here: readStream →
-watermarked tumbling-window aggregation → writeStream. The same bucket/
-aggregate expressions as rollup.py, so batch and streaming tiers agree.
+watermarked tumbling-window aggregation → writeStream. It aggregates the
+same posexploded token stream with the same MEASURES partials as
+rollup.rollup_1m, so the streaming 1m tier has the batch tier's columns,
+types and values.
 
 The 1h/1d cascades stay batch-incremental (they re-aggregate closed 1m
 buckets via the checkpoint ledger), which avoids multi-level streaming
@@ -19,7 +21,8 @@ from pyspark.sql.types import (BooleanType, DoubleType, LongType,
                                StringType, StructField, StructType,
                                TimestampType)
 
-from .rollup import with_event_time
+from .rollup import (ROLLUP_COLUMNS, partial_aggs, token_stream,
+                     with_event_time)
 
 
 def streaming_rollup_1m(raw_stream: DataFrame,
@@ -28,26 +31,17 @@ def streaming_rollup_1m(raw_stream: DataFrame,
 
     outputMode('update')-compatible: late rows inside the watermark
     re-emit their bucket; MERGE on (source, bucket_ts) downstream keeps
-    the tier idempotent (same keys as the batch path).
+    the tier idempotent (same keys as the batch path). One group per
+    (source, minute) holds every doc of the bucket, so the partials are
+    already the final measures — no salt and no merge phase.
     """
-    df = with_event_time(raw_stream)
-    df = df.withWatermark("event_ts", watermark)
-    agg = (df.groupBy("source", F.window("event_ts", "1 minute").alias("win"))
-           .agg(F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.col("n_tok").cast("long")).alias("sum_n_tok"),
-                F.min("n_tok").alias("min_n_tok"),
-                F.max("n_tok").alias("max_n_tok")))
-    return agg.select("source", F.col("win.start").alias("bucket_ts"),
-                      "n_docs", "sum_n_tok", "min_n_tok", "max_n_tok",
-                      F.lit(False).alias("gap_filled"))
-
-
-def run_stream_to_memory(spark, raw_stream: DataFrame, query_name: str,
-                         watermark: str = "10 minutes"):
-    """Test harness: stream → in-memory sink (complete mode)."""
-    agg = streaming_rollup_1m(raw_stream, watermark)
-    return (agg.writeStream.format("memory").queryName(query_name)
-            .outputMode("update").start())
+    df = with_event_time(raw_stream).withWatermark("event_ts", watermark)
+    agg = (df.select("source", "event_ts", "n_tok", token_stream())
+           .groupBy("source", F.window("event_ts", "1 minute").alias("win"))
+           .agg(*partial_aggs()))
+    return (agg.withColumn("bucket_ts", F.col("win.start"))
+            .withColumn("gap_filled", F.lit(False))
+            .select(*ROLLUP_COLUMNS))
 
 
 # ---------------------------------------- custom stateful operator

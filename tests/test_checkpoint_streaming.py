@@ -223,12 +223,28 @@ class TestStreaming:
         from tstoken.rollup import rollup_1m
         from tstoken.streaming import streaming_rollup_1m
 
-        raw = synth.generate_tokens_raw(spark, 4000, n_sources=2)
+        # synth's `tokens` is non-nullable; an explicit nullable schema
+        # admits zero-token docs: `[]` and null tokens, inside buckets
+        # that hold real docs and in a bucket of only such docs
+        schema = ("doc_id string, tokens array<int>, n_tok int, "
+                  "source string")
+        zero_tok = spark.createDataFrame([
+            ("src-000-e-1", [], 0, "src-000"),
+            ("src-001-n-2", None, 0, "src-001"),
+            ("src-000-e-900000", [], 0, "src-000"),
+            ("src-000-n-900001", None, 0, "src-000"),
+        ], schema)
+        raw = synth.generate_tokens_raw(spark, 4000, n_sources=2) \
+            .unionByName(zero_tok)
         path = str(tmp_path / "stream_src")
         raw.write.mode("overwrite").parquet(path)
+        raw = spark.read.schema(schema).parquet(path)
 
-        stream = spark.readStream.schema(raw.schema).parquet(path)
+        stream = spark.readStream.schema(schema).parquet(path)
         agg = streaming_rollup_1m(stream)
+        batch = rollup_1m(raw)
+        assert [(f.name, f.dataType) for f in agg.schema] \
+            == [(f.name, f.dataType) for f in batch.schema]
         q = (agg.writeStream.format("memory").queryName("t1m_stream")
              .outputMode("complete").start())
         q.processAllAvailable()
@@ -236,11 +252,12 @@ class TestStreaming:
             .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
         q.stop()
 
-        want = rollup_1m(raw).drop("sum_tok_sq", "gap_filled").toPandas() \
+        want = batch.toPandas() \
             .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
-        got = got.drop(columns=["gap_filled"])
-        for c in ["n_docs", "sum_n_tok", "min_n_tok", "max_n_tok"]:
-            assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
+        pd.testing.assert_frame_equal(got, want)
+        # the bucket of only zero-token docs: 2 docs, sum_tok_sq 0 not null
+        assert want.loc[want["max_n_tok"] == 0, ["n_docs", "sum_tok_sq"]] \
+            .values.tolist() == [[2, 0]]
 
     def test_late_data_dropped_and_accounted(self, spark, tmp_path):
         """Out-of-order / late-arrival drill (SURVEY §2.10 watermark
@@ -321,10 +338,11 @@ class TestStreaming:
         # the late rows never arrived
         on_time = spark.createDataFrame(
             batches[0] + [doc(60, 7, "c"), doc(120, 9, "c2")], schema)
-        want = rollup_1m(on_time).drop("sum_tok_sq", "gap_filled") \
+        want = rollup_1m(on_time) \
             .toPandas().sort_values("bucket_ts").reset_index(drop=True)
         assert len(got) == 32  # 0..29 + 60 + 120; 240 never finalized
-        for c in ["n_docs", "sum_n_tok", "min_n_tok", "max_n_tok"]:
+        for c in ["n_docs", "sum_n_tok", "min_n_tok", "max_n_tok",
+                  "sum_tok_sq", "gap_filled"]:
             assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
         # the poisoned minute-5 bucket kept its on-time value
         m5 = got[got["bucket_ts"].astype("int64") // 10**9

@@ -127,6 +127,8 @@ def main():
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
+    from tstoken.session import half_host_mem_gb
+
     # Reproduce the DRIVER's environment faithfully: a vanilla session
     # with no tstoken on the worker PYTHONPATH (round-1 verdict #1 —
     # tstoken.session's PYTHONPATH fix masked 7 worker-side
@@ -159,7 +161,8 @@ def main():
     # the box: the minhash-md5 pipeline oracle at the synthesized large
     # sf (50k docs) materializes ~10^9 shingle-hash rows and was
     # observed climbing past 90 GB RSS before this limit existed.
-    dmem = os.environ.get("CHECK_ORACLES_DUCKDB_MEM", "32GB")
+    dmem = os.environ.get("CHECK_ORACLES_DUCKDB_MEM",
+                          f"{half_host_mem_gb(32)}GB")
     spill = os.path.join(tempfile.gettempdir(), "check_oracles_duckdb_spill")
     os.makedirs(spill, exist_ok=True)
     con.execute(f"SET memory_limit='{dmem}'")
