@@ -53,6 +53,21 @@ DETECTORS = ("iqr", "mad", "stl", "stl_z", "mad_avg", "stl_z_avg",
              "ensemble", "ensemble_adaptive")
 
 
+def thresholds_label() -> str:
+    """The ensemble thresholds this run scores, read from the live
+    `extrema_ensemble_flags` defaults."""
+    import inspect
+
+    from tstoken.detect import extrema_ensemble_flags
+    d = {k: p.default for k, p in
+         inspect.signature(extrema_ensemble_flags).parameters.items()}
+    return (f"FROZEN library defaults (avg {d['avg_threshold']} / spike "
+            f"{d['spike_threshold']} / dip {d['dip_threshold']}); adaptive "
+            f"column is the OPT-IN adaptive_dip=True variant (dip "
+            f"{d['adaptive_dip_low']} when median docs/bucket <= "
+            f"{d['adaptive_dip_max_density']:g})")
+
+
 def score_regime(spark, kwargs):
     from pyspark.sql import functions as F
 
@@ -139,10 +154,7 @@ def main():
     summary = {
         "rows": ROWS, "sources": SOURCES, "cpus": CPUS,
         "commit": commit,
-        "thresholds": "FROZEN library defaults "
-                      "(avg 3.5 / spike 3.5 / dip 8.0); adaptive "
-                      "column is the OPT-IN adaptive_dip=True variant "
-                      "(dip 5.0 when median docs/bucket <= 3)",
+        "thresholds": thresholds_label(),
         "regimes": results,
         "ensemble_train": results["train(seed0)"]["ensemble"],
         "ensemble_heldout_min": min(held),

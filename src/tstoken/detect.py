@@ -5,6 +5,11 @@ Two layers (SURVEY.md §7.3):
     search): pure pyspark.sql expressions — whole-stage codegen, no
     Python in the data path. These are exact reimplementations of the
     reference's fence math (catch.py:124-165, 186, 216-235, 743-947).
+    The percentile fences (IQR, MAD, the extrema ensemble) run in one
+    windowed pass: exact percentiles over Window.partitionBy("source"),
+    one shuffle and no aggregate-then-broadcast-join. z-score and MA
+    keep groupBy, since windowed avg/stddev would change the float
+    summation order.
   - GROUPED Arrow-UDF detectors (classic/STL/MSTL/ESD): applyInPandas
     per source, each group being ONE rolled-up series (bounded size:
     buckets, never raw rows), running the tstoken.compat pipeline.
@@ -35,6 +40,13 @@ FLAG_SCHEMA = StructType([
 VALUE_COL = "sum_n_tok"
 
 
+def _sourced(rollup: DataFrame) -> DataFrame:
+    """Rows with a source. The percentile fences are per source, and a
+    NULL source is not a series: those rows get no flag, as with the
+    fence joins (and the oracles' `JOIN ... ON source`)."""
+    return rollup.filter(F.col("source").isNotNull())
+
+
 def _flags_select(df: DataFrame, method: str, flag, score) -> DataFrame:
     return df.select(
         "source", "bucket_ts", F.lit(method).alias("method"),
@@ -47,15 +59,13 @@ def iqr_flags(rollup: DataFrame, value_col: str = VALUE_COL) -> DataFrame:
     """Per-source IQR fences, fully native (catch.py:150-157 semantics:
     exact linear-interpolation percentiles, fences ±1.5·IQR)."""
     v = F.col(value_col).cast("double")
-    fences = (rollup.groupBy("source")
-              .agg(F.percentile(v, F.array(F.lit(0.25), F.lit(0.75)))
-                   .alias("q")))
-    fences = fences.select(
-        "source",
+    q = F.percentile(v, F.array(F.lit(0.25), F.lit(0.75))) \
+        .over(Window.partitionBy("source"))
+    j = _sourced(rollup).withColumn("q", q).select(
+        "*",
         (F.col("q")[0] - 1.5 * (F.col("q")[1] - F.col("q")[0])).alias("lo"),
         (F.col("q")[1] + 1.5 * (F.col("q")[1] - F.col("q")[0])).alias("hi"),
         (F.col("q")[1] - F.col("q")[0]).alias("iqr"))
-    j = rollup.join(F.broadcast(fences), "source")
     flag = (v < F.col("lo")) | (v > F.col("hi"))
     dist = F.greatest(F.col("lo") - v, v - F.col("hi"), F.lit(0.0))
     score = F.when(F.col("iqr") > 0, dist / F.col("iqr")).otherwise(dist)
@@ -80,21 +90,21 @@ def zscore_flags(rollup: DataFrame, value_col: str = VALUE_COL,
 
 def mad_flags(rollup: DataFrame, value_col: str = VALUE_COL,
               threshold: float = 3.5) -> DataFrame:
-    """Modified z-score 0.6745·|x-med|/MAD > 3.5 (catch.py:216-235),
-    in two native aggregation passes — no UDF (SURVEY.md A3)."""
+    """Modified z-score 0.6745·|x-med|/MAD > 3.5 (catch.py:216-235):
+    the median, then the MAD, as two windowed percentiles over one
+    shuffle — no UDF (SURVEY.md A3)."""
     v = F.col(value_col).cast("double")
-    med = rollup.groupBy("source").agg(
-        F.percentile(v, F.lit(0.5)).alias("med"))
-    j1 = rollup.join(F.broadcast(med), "source") \
-               .withColumn("absdev", F.abs(v - F.col("med")))
-    mad = j1.groupBy("source").agg(
-        F.percentile(F.col("absdev"), F.lit(0.5)).alias("mad"))
-    j2 = j1.join(F.broadcast(mad), "source")
-    score = F.when(F.col("mad") > 0,
-                   F.lit(0.6745) * F.col("absdev") / F.col("mad")) \
-             .otherwise(F.when(F.col("absdev") > 0, F.lit(1e308))
-                        .otherwise(F.lit(0.0)))
-    return _flags_select(j2, "mad", score > threshold, score)
+    src = Window.partitionBy("source")
+    med = F.percentile(v, F.lit(0.5)).over(src)
+    j = _sourced(rollup).withColumn("absdev", F.abs(v - med)).withColumn(
+        "mad", F.percentile(F.col("absdev"), F.lit(0.5)).over(src))
+    score = _modified_z(F.col("absdev"), F.col("mad"))
+    return _flags_select(j, "mad", score > threshold, score)
+
+
+def _modified_z(absdev: F.Column, mad: F.Column) -> F.Column:
+    return F.when(mad > 0, F.lit(0.6745) * absdev / mad) \
+            .otherwise(F.when(absdev > 0, F.lit(1e308)).otherwise(F.lit(0.0)))
 
 
 # --------------------------------------------------------- moving average
@@ -222,11 +232,10 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
     the round-1 engine-native rows. Rolling-mean detrending absorbs
     seasonality; log scale makes x8 spikes and x1/8 dips symmetric.
 
-    Scale note: MAD is inherently two-pass, so the windowed feature
-    subtree is referenced by both aggregation passes and the final
-    projection. Run this over a MATERIALIZED tier table (the engine's
-    TableIO pipeline does), not over an unmaterialized rollup lineage —
-    otherwise each reference recomputes the rollup upstream.
+    Scale note: gap-filled buckets are unioned back from a second read
+    of `rollup`, so run this over a MATERIALIZED tier table (the
+    engine's TableIO pipeline does), not an unmaterialized rollup
+    lineage.
 
     `adaptive_dip=True` (OPT-IN; the frozen defaults above are never
     altered by it being off) lowers the dip threshold to
@@ -245,9 +254,9 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
     the probe table as the cautionary row); held-out scores in
     BENCH/holdout_f1.json.
     """
-    ng = rollup
+    ng = _sourced(rollup)
     if "gap_filled" in rollup.columns:
-        ng = rollup.filter(~F.col("gap_filled"))
+        ng = ng.filter(~F.col("gap_filled"))
     w = Window.partitionBy("source").orderBy("bucket_ts") \
         .rowsBetween(-half_window, half_window)
     avg_v = F.col("sum_n_tok").cast("double") / F.col("n_docs")
@@ -259,31 +268,22 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
             .withColumn("d_min", F.col("lmin") - F.avg("lmin").over(w))
             .withColumn("d_max", F.col("lmax") - F.avg("lmax").over(w)))
 
-    # All three MAD fences share ONE two-pass aggregation over feat
-    # (3 medians in pass 1, 3 MADs in pass 2, broadcast joins back) —
-    # calling mad_flags three times would re-derive the windowed feat
-    # subtree up to 6x. Fence math is identical to mad_flags.
+    # All three MAD fences share ONE windowed pass over feat: medians,
+    # then MADs, as percentiles over the source window, which the
+    # rolling window above already partitions by — one shuffle in all.
+    # Fence math is identical to mad_flags.
+    src = Window.partitionBy("source")
     cols = {"a": "avg_n_tok", "s": "d_min", "d": "d_max"}
-    dens_agg = ([F.percentile(F.col("n_docs").cast("double"), F.lit(0.5))
-                 .alias("med_docs")] if adaptive_dip else [])
-    med = feat.groupBy("source").agg(*[
-        F.percentile(F.col(c), F.lit(0.5)).alias(f"med_{t}")
-        for t, c in cols.items()], *dens_agg)
-    j1 = feat.join(F.broadcast(med), "source")
-    for t, c in cols.items():
-        j1 = j1.withColumn(f"ad_{t}", F.abs(F.col(c) - F.col(f"med_{t}")))
-    mad = j1.groupBy("source").agg(*[
-        F.percentile(F.col(f"ad_{t}"), F.lit(0.5)).alias(f"mad_{t}")
-        for t in cols])
-    j2 = j1.join(F.broadcast(mad), "source")
-
-    def mscore(t: str) -> F.Column:
-        return F.when(F.col(f"mad_{t}") > 0,
-                      F.lit(0.6745) * F.col(f"ad_{t}") / F.col(f"mad_{t}")) \
-                .otherwise(F.when(F.col(f"ad_{t}") > 0, F.lit(1e308))
-                           .otherwise(F.lit(0.0)))
-
-    s_a, s_s, s_d = mscore("a"), mscore("s"), mscore("d")
+    dens = ([F.percentile(F.col("n_docs").cast("double"), F.lit(0.5))
+             .over(src).alias("med_docs")] if adaptive_dip else [])
+    j = feat.select("*", *[
+        F.abs(F.col(c) - F.percentile(F.col(c), F.lit(0.5)).over(src))
+        .alias(f"ad_{t}") for t, c in cols.items()], *dens)
+    j = j.select("*", *[
+        F.percentile(F.col(f"ad_{t}"), F.lit(0.5)).over(src)
+        .alias(f"mad_{t}") for t in cols])
+    s_a, s_s, s_d = (_modified_z(F.col(f"ad_{t}"), F.col(f"mad_{t}"))
+                     for t in cols)
     dip_fence = F.lit(dip_threshold)
     if adaptive_dip:
         dip_fence = F.when(
@@ -292,7 +292,7 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
     flag = (s_a > avg_threshold) | (s_s > spike_threshold) \
         | ((s_d > dip_fence) & (F.col("d_max") < 0))
     score = F.greatest(s_a, s_s, s_d)
-    out = _flags_select(j2, "extrema_ensemble", flag, score)
+    out = _flags_select(j, "extrema_ensemble", flag, score)
     if "gap_filled" in rollup.columns:
         # flag contract: EVERY input bucket gets a boolean (module
         # docstring / FIXTURES A2). Gap-filled buckets carry no

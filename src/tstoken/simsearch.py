@@ -79,7 +79,10 @@ def with_cosine(pairs: DataFrame, a_col: str = "qvec",
     na = F.col(a_norm_col) if a_norm_col else _norm(a, dim)
     nb = F.col(b_norm_col) if b_norm_col else _norm(b, dim)
     denom = na * nb
-    cos = F.when(denom > 0, _dot(a, b, dim) / denom).otherwise(F.lit(0.0))
+    # a zero-norm side scores 0.0; a width mismatch (null dot or norm)
+    # stays null, so it never ranks as a real 0.0 match
+    cos = F.when(denom > 0, _dot(a, b, dim) / denom) \
+           .when(denom.isNotNull(), F.lit(0.0))
     return pairs.withColumn("cosine", F.round(cos, 6))
 
 

@@ -539,6 +539,23 @@ class TestSimSearch:
         recall = len(e & a) / len(e)
         assert recall >= 0.5, recall
 
+    def test_width_mismatch_scores_null(self, spark):
+        from tstoken.simsearch import cosine_topk, with_cosine
+        rows = [(1, [-1.0, 0.5, 0.0, 0.0]), (2, [-1.0, -0.2, 0.0, 0.0]),
+                (4, [0.0, 0.0, 0.0, 0.0]), (3, [1.0, 1.0, 1.0])]
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        q = spark.createDataFrame([(0, [1.0, 0.0, 0.0, 0.0])],
+                                  "qid long, qvec array<double>")
+        pairs = emb.crossJoin(q)
+        for dim in (4, None):
+            got = dict(with_cosine(pairs, dim=dim)
+                       .select("vec_id", "cosine").collect())
+            assert got[3] is None, (dim, got)  # width 3 vs 4
+            assert got[4] == 0.0, (dim, got)  # zero norm
+            assert got[1] < 0 and got[2] < 0, (dim, got)
+        top = cosine_topk(emb, q, k=3).toPandas().sort_values("rank")
+        assert top["vec_id"].tolist() == [4, 1, 2]
+
 
 class TestTextOpsRound2:
     def test_simhash_keeps_zero_word_docs(self, spark):

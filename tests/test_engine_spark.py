@@ -2,6 +2,8 @@
 tier cascade, gap-fill, salting invariance, detector F1, codec
 round-trip through Spark, retention (SURVEY.md §5 engine test plan)."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -192,6 +194,40 @@ class TestDetectors:
         for src, grp in merged.groupby("source"):
             expect = mad_labels(grp["sum_n_tok"].to_numpy(float))
             assert (grp["is_outlier"].to_numpy() == expect).all(), src
+
+    @pytest.mark.parametrize("fn", [
+        detect.iqr_flags, detect.mad_flags, detect.extrema_ensemble_flags,
+        lambda t: detect.extrema_ensemble_flags(t, adaptive_dip=True)],
+        ids=["iqr", "mad", "ensemble", "ensemble_adaptive"])
+    def test_percentile_fences_one_shuffle(self, spark, gf, tmp_path, fn):
+        # over a staged tier: one hash shuffle on source, no broadcast
+        # (the ensemble's gap-row union adds no exchange)
+        gf.write.parquet(str(tmp_path / "t"))
+        df = fn(spark.read.parquet(str(tmp_path / "t")))
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan
+        final = plan.split("== Initial Plan ==")[0]
+        assert "BroadcastExchange" not in plan
+        assert re.findall(r"(?<!\w)Exchange (\w+)(?:\((\w+)#)?", final) == \
+            [("hashpartitioning", "source")], final
+
+    @pytest.mark.parametrize("fn", [
+        detect.iqr_flags, detect.mad_flags, detect.extrema_ensemble_flags],
+        ids=["iqr", "mad", "ensemble"])
+    def test_percentile_fences_skip_null_source(self, gf, fn):
+        # a NULL-source bucket is no series: it gets no flag and moves
+        # no other source's fences
+        null_row = gf.filter(~F.col("gap_filled")).limit(1) \
+            .withColumn("source", F.lit(None).cast(gf.schema["source"]
+                                                    .dataType))
+        cols = ["source", "bucket_ts", "is_outlier", "score"]
+        got = fn(gf.unionByName(null_row)).toPandas()[cols]
+        want = fn(gf).toPandas()[cols]
+        assert got["source"].notna().all()
+        pd.testing.assert_frame_equal(
+            got.sort_values(cols[:2]).reset_index(drop=True),
+            want.sort_values(cols[:2]).reset_index(drop=True))
 
     def test_stl_f1_vs_ground_truth(self, spark, gf):
         fl = detect.grouped_flags(gf, "1m", "stl").toPandas()

@@ -22,7 +22,7 @@ INTERESTING = re.compile(
     r"(Scan parquet|PushedFilters|ReadSchema|BroadcastHashJoin|"
     r"SortMergeJoin|BroadcastNestedLoopJoin|CartesianProduct|"
     r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas|PythonMapInArrow|"
-    r"Generate explode|Generate posexplode|HashAggregate|Exchange)")
+    r"Generate explode|Generate posexplode|HashAggregate|Exchange|Window)")
 
 SUMMARY_KEYS = ["Scan parquet", "BroadcastHashJoin", "SortMergeJoin",
                 "BroadcastNestedLoopJoin", "CartesianProduct",
